@@ -37,7 +37,6 @@ from webscraper_spark.functions.derive import (  # noqa: E402
     with_typed,
 )
 from webscraper_spark.functions.derive import shopify_body  # noqa: E402
-from webscraper_spark.functions.extract import with_extraction  # noqa: E402
 from webscraper_spark.functions.shopify import hires_images, shopify_sheet  # noqa: E402
 from webscraper_spark.functions.pricing import (  # noqa: E402
     preis_12_s_expr,
@@ -4051,11 +4050,15 @@ u AS (
            ELSE '<link rel="canonical" href="https://central.ex.com/p/' || b || '">' END AS html
   FROM p
 ),
+tagged AS (
+  SELECT url, regexp_extract(html, '(?i)<link\b[^>]*\brel\s*=\s*["'']?canonical\b[^>]*/?>') AS tag
+  FROM u
+),
 hrefed AS (
   SELECT url,
-    regexp_extract(regexp_extract(html, '(?i)<link\b[^>]*\brel\s*=\s*["'']?canonical\b[^>]*/?>'),
-                   '(?i)\bhref\s*=\s*["'']([^"'']*)["'']', 1) AS href
-  FROM u
+    regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 1)
+    || regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 2) AS href
+  FROM tagged
 ),
 c AS (
   SELECT url,
@@ -4422,7 +4425,8 @@ tags AS (
 e0 AS (
   SELECT url,
     lower(regexp_extract(tag, '(?i)\bhreflang\s*=\s*["'']?([a-zA-Z0-9-]+)', 1)) AS lang,
-    regexp_extract(tag, '(?i)\bhref\s*=\s*["'']([^"'']*)["'']', 1) AS alt_url
+    regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 1)
+    || regexp_extract(tag, '(?i)\bhref\s*=\s*(?:"([^"]*)"|''([^'']*)'')', 2) AS alt_url
   FROM tags
 ),
 e AS (
@@ -4514,7 +4518,7 @@ def _q_stream_backoff_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle for a streaming stateful operator, possible because the fold
     is deterministic given all waves (cross-micro-batch state carry is
     pinned by tests/test_streaming.py)."""
-    import tempfile
+    import shutil
 
     from webscraper_spark.streaming.stream import (
         run_stream_to_memory,
@@ -4538,7 +4542,11 @@ def _q_stream_backoff_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in one session, and a stopped memory query's table lingers
     _q_stream_backoff_replay._n += 1  # type: ignore[attr-defined]
     name = f"stream_backoff_replay_{_q_stream_backoff_replay._n}"  # type: ignore[attr-defined]
-    run_stream_to_memory(stream_adaptive_backoff(src), name)
+    try:
+        run_stream_to_memory(stream_adaptive_backoff(src), name)
+    finally:
+        # the memory sink holds the result once the query has stopped
+        shutil.rmtree(tmp, ignore_errors=True)
     return spark.sql(f"SELECT host, wave, throttle_streak, delay_ms FROM {name}")
 
 

@@ -30,9 +30,9 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      BENCH_FULL_PROTOCOL=1 for the long-form protocol (reps 5/3, sf2.5),
      BENCH_SCALING_SF / BENCH_SCALING_REPS / BENCH_WITHIN_REPS to override,
      BENCH_DEADLINE_S (default 2100) wall-clock budget for the default run —
-     study reps past it are dropped (>=1 rep per study always runs),
-     WS_TASK_CPUS to override spark.task.cpus for every measured session
-     (shipped posture: 2 — see session.py).
+     study reps past it are dropped (>=1 rep per study always runs).
+Every measured session runs with spark.task.cpus=TASK_CPUS (2 — see
+session.py).
 """
 
 from __future__ import annotations
@@ -103,12 +103,8 @@ def _sf_from_dir(sf_dir: str) -> float:
     return float(m.group(1)) if m else 0.1
 
 
-def _task_cpus() -> int:
-    # Shipped posture is 2 (a crawl UDF task occupies a JVM thread AND a
-    # Python worker — session.py); WS_TASK_CPUS overrides it so alternate
-    # postures (e.g. the task.cpus=1 cotenancy experiment) are reproducible
-    # without code edits.
-    return int(os.environ.get("WS_TASK_CPUS", "2"))
+# A crawl UDF task occupies a JVM thread AND a Python worker (session.py).
+TASK_CPUS = 2
 
 
 def _fresh_spark(cores: int):
@@ -127,7 +123,7 @@ def _fresh_spark(cores: int):
     if os.path.isdir("/dev/shm"):
         extra["spark.local.dir"] = _my_local_dir()
     return get_spark(app_name=f"bench{cores}", cores=cores, shuffle_partitions=max(cores, 8),
-                     task_cpus=_task_cpus(), extra_conf=extra)
+                     task_cpus=TASK_CPUS, extra_conf=extra)
 
 
 def _bench_politeness(spark):
@@ -787,8 +783,8 @@ BASELINE.md sandbox protocol (no real cluster in sandbox). Configs are
 interleaved within each rep; pure-Python ALU + memory-bandwidth probes run
 before every rep (this shared host advertises 32 vCPUs, grants ~20-22
 cores, and swings 2-3x on a minutes timescale — all reps listed so the
-window luck is visible). task.cpus={_task_cpus()}, so task slots are
-cores/{_task_cpus()} on both sides of every pair (the 4x slot ratio is
+window luck is visible). task.cpus={TASK_CPUS}, so task slots are
+cores/{TASK_CPUS} on both sides of every pair (the 4x slot ratio is
 preserved).
 """]
     if "mandated_8_32" in scaling:

@@ -175,11 +175,15 @@ def test_canonical_case_and_quote_styles(spark):
         ("https://a.ex/v3", f'<link rel=canonical href="{tgt}">'),
         # rel="canonical-x" must NOT match (\b guard is not a prefix match)
         ("https://a.ex/v4", f'<link rel="canonicalish" href="{tgt}">'),
+        # an apostrophe inside a double-quoted href is part of the URL
+        ("https://a.ex/v5", """<link rel="canonical" href="https://a.ex/o'brien">"""),
     ]
     df = spark.createDataFrame(rows, "url string, html string")
     got = {r["canonical"]: r["n_members"] for r in canonical_clusters(df).collect()}
     assert got[tgt] == 4
     assert got["https://a.ex/v4"] == 1  # self-canonical fallback
+    assert got["https://a.ex/o'brien"] == 1
+    assert len(got) == 3
 
 
 # --- hreflang clustering (operators/hreflang.py, SURVEY 2.10 L50) ---
@@ -235,7 +239,11 @@ def test_hreflang_attribute_order_case_quotes(spark):
         ("https://v.ex/4", '<link rel="alternate stylesheet" href="/s.css"/>'),
         # hreflang but no rel=alternate at all -> tag regex never fires
         ("https://v.ex/5", f'<link hreflang="de" href="{alt}"/>'),
+        # an apostrophe inside a double-quoted href is part of the URL
+        ("https://v.ex/6", """<link rel="alternate" hreflang="en" href="https://a.ex/o'brien"/>"""),
     ]
     df = spark.createDataFrame(rows, "url string, html string")
     got = {(r["url"], r["lang"], r["alt_url"]) for r in hreflang_edges(df).collect()}
-    assert got == {(f"https://v.ex/{i}", "de", alt) for i in range(4)}
+    assert got == {(f"https://v.ex/{i}", "de", alt) for i in range(4)} | {
+        ("https://v.ex/6", "en", "https://a.ex/o'brien")
+    }

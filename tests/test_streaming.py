@@ -147,3 +147,17 @@ def test_stream_adaptive_backoff_streak_across_microbatches(spark, tmp_path_fact
     assert got[("A", 2)] == (2, 400)    # streak carried across the batch boundary
     assert got[("A", 3)] == (0, 100)    # clean wave resets immediately
     assert all(got[("B", w)] == (0, 100) for w in (0, 1, 2))
+
+
+def test_stream_backoff_replay_leaves_no_source_dir(spark, sf001_dir, tmp_path, monkeypatch):
+    """The replay query's parquet source dir is removed once the memory
+    sink holds the result; repeated calls leave nothing behind."""
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = sorted(entry._q_stream_backoff_replay(spark, sf001_dir).collect())
+    second = sorted(entry._q_stream_backoff_replay(spark, sf001_dir).collect())
+    assert first and first == second
+    assert not list(tmp_path.glob("ws_stream_backoff_*"))

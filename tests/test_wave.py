@@ -277,3 +277,25 @@ def test_url_hygiene_drops_before_scheduling(spark, inputs, oracle_result, tmp_p
     seen = {r.url for r in spark.read.parquet(paths["seen"]).collect()}
     assert "https://bad.ex/casino/promo" not in seen
     assert "https://bad.ex/a/b/c/d/e/f/g/h/i/leaf" not in seen
+
+
+def test_run_crawl_leaves_session_settings_as_found(spark, inputs, tmp_path_factory):
+    """run_crawl sizes scan splits to its corpus for the crawl only; the
+    session's split and partition-coalescing settings are what the caller
+    had before and after."""
+    pages, seeds, robots, politeness = inputs
+    keys = {
+        "spark.sql.files.maxPartitionBytes": "64MB",
+        "spark.sql.files.openCostInBytes": "2MB",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        ckpt = str(tmp_path_factory.mktemp("ckpt_conf"))
+        run_crawl(spark, pages, seeds, robots, politeness, ckpt, CrawlConfig(max_waves=2))
+        assert {k: spark.conf.get(k) for k in keys} == keys
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

@@ -33,6 +33,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from webscraper_spark.session import ARROW_BATCH_ROWS
+
     # master/executor layout comes from spark-submit; only engine confs here
     # (the same ones session.get_spark sets for local mode).
     spark = (
@@ -41,7 +43,7 @@ def main() -> None:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", os.environ.get("WS_ARROW_BATCH", "1024"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .getOrCreate()

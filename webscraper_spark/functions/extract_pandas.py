@@ -16,11 +16,19 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webscraper_spark.functions.canon import _canon_host_py
+from webscraper_spark.functions.extract import (
+    ADDR_FIELDS,
+    ATTRS_FIELDS,
+    LISTING_MARKER,
+    PATTERNS,
+    PRICE_SUFFIX,
+    x_status,
+)
 
 _S = lambda: T.StringType()  # noqa: E731
 X_STRUCT = T.StructType(
@@ -60,37 +68,8 @@ X_STRUCT = T.StructType(
     ]
 )
 
-# compiled once per executor; identical patterns to extract.py
-_P = {
-    "title": re.compile(r'<h3 class="ad-title">([^<]*)</h3>'),
-    "category": re.compile(r'<strong class="category">([^<]*)</strong>'),
-    "attrs": re.compile(r'<span class="attributes">([^<]*)</span>'),
-    "price": re.compile(r'<strong class="price">([^<]*)</strong>'),
-    "km": re.compile(r"((?:\d*[.]\d{3}|\d*) km)"),
-    "power": re.compile(r"(\d*\skW\s.\d*\sPS.)"),
-    "fuel": re.compile(r"(Benzin|Diesel|Elektro|Erdgas)"),
-    "trans": re.compile(r"(Automatik|Schaltgetriebe)"),
-    "ez": re.compile(r"(\d{2}.\d{4})"),
-    "cons": re.compile(r'<dd class="consumption">([^<]*)</dd>'),
-    "co2": re.compile(r'<dd class="emission">([^<]*)</dd>'),
-    "damage": re.compile(r'<span class="damaged">([^<]*)</span>'),
-    "country": re.compile(r'<span class="countryVersion">([^<]*)</span>'),
-    "dt": re.compile(r"<dt>([^<]*)</dt>"),
-    "dd": re.compile(r"<dd>([^<]*)</dd>"),
-    "li": re.compile(r"<li>([^<]*)</li>"),
-    "img": re.compile(r'data-lazy="([^"]+)"'),
-    "dealer": re.compile(r"<address><strong>([^<]*)</strong>"),
-    "addr": re.compile(r'<div class="addressData">([^<]*)</div>'),
-    "plz": re.compile(r"(\d{5})"),
-    "city": re.compile(r"([a-zA-Z]+-?\D+$)"),
-    "street": re.compile(r"(^\D*\d*\w(?:-|,)?\w*)"),
-    "phone": re.compile(r'<span class="phone">([^<]*)</span>'),
-    "phone_strip": re.compile(r"^Tel\.: "),
-    "rating": re.compile(r'data-rating="([^"]+)"'),
-    "n_ratings": re.compile(r'<span class="amount-of-ratings">([^<]*)</span>'),
-    "pubdate": re.compile(r"Online seit (\d{2}.\d{2}.\d{4})"),
-    "href": re.compile(r'href="([^"]+)"'),
-}
+# compiled once per executor from the native engine's table
+_P = {k: re.compile(v) for k, v in PATTERNS.items()}
 
 
 def _x1(series: pd.Series, pat: re.Pattern) -> pd.Series:
@@ -102,60 +81,40 @@ def _x1(series: pd.Series, pat: re.Pattern) -> pd.Series:
 @F.pandas_udf(X_STRUCT)
 def extract_all_udf(html_s: pd.Series) -> pd.DataFrame:
     h = html_s
-    attrs = _x1(h, _P["attrs"])
-    addr = _x1(h, _P["addr"])
-    price_raw = _x1(h, _P["price"])
-    phone_raw = _x1(h, _P["phone"])
+    attrs = _x1(h, _P["x_attrs_line"])
+    addr = _x1(h, _P["x_address_raw"])
 
-    def findall(series: pd.Series, pat: re.Pattern):
+    def findall(series: pd.Series, field: str):
+        pat = _P[field]
         return [pat.findall(s) if isinstance(s, str) else None for s in series]
 
-    dts = findall(h, _P["dt"])
-    dds = findall(h, _P["dd"])
-    attr_map = [dict(zip(a, b)) if a is not None else None for a, b in zip(dts, dds)]
-    imgs = [["https:" + u for u in lst] if lst is not None else None for lst in findall(h, _P["img"])]
-    outlinks = findall(h, _P["href"])
-    canon_pairs = [
-        [(_canon_host_py(u)) for u in lst] if lst is not None else None for lst in outlinks
-    ]
-    canon_urls = [[p[0] for p in lst] if lst is not None else None for lst in canon_pairs]
-    canon_hosts = [[p[1] for p in lst] if lst is not None else None for lst in canon_pairs]
+    dts = findall(h, "dt")
+    dds = findall(h, "dd")
+    outlinks = findall(h, "x_outlinks")
+    canon_pairs = [[_canon_host_py(u) for u in lst] if lst is not None else None for lst in outlinks]
 
-    out = pd.DataFrame(
-        {
-            "x_title": _x1(h, _P["title"]),
-            "x_attrs_line": attrs,
-            "x_category": _x1(h, _P["category"]),
-            "x_price_cell": price_raw.str.replace(" Brutto", "", regex=False),
-            "x_km_cell": _x1(attrs, _P["km"]),
-            "x_power_cell": _x1(attrs, _P["power"]),
-            "x_fuel": _x1(attrs, _P["fuel"]),
-            "x_transmission": _x1(attrs, _P["trans"]),
-            "x_ez": _x1(attrs, _P["ez"]),
-            "x_consumption": _x1(h, _P["cons"]),
-            "x_co2": _x1(h, _P["co2"]),
-            "x_damage": _x1(h, _P["damage"]),
-            "x_country": _x1(h, _P["country"]),
-            "x_attr_map": attr_map,
-            "x_features": findall(h, _P["li"]),
-            "x_images": imgs,
-            "x_dealer_name": _x1(h, _P["dealer"]),
-            "x_address_raw": addr,
-            "x_postal_code": _x1(addr, _P["plz"]),
-            "x_dealer_city": _x1(addr, _P["city"]),
-            "x_dealer_street": _x1(addr, _P["street"]),
-            # Ruby sub: FIRST occurrence only (cars_controller.rb:242)
-            "x_phone": phone_raw.str.replace(_P["phone_strip"], "", regex=True),
-            "x_dealer_rating": _x1(h, _P["rating"]),
-            "x_quantity_ratings": _x1(h, _P["n_ratings"]),
-            "x_pubdate": _x1(h, _P["pubdate"]),
-            "x_outlinks": outlinks,
-            "x_outlinks_canon": canon_urls,
-            "x_outlink_hosts": canon_hosts,
-            "x_is_listing": h.str.contains('<ul class="resultList">', regex=False).astype(object).where(h.notna(), None),
-        }
+    cols = {
+        f: _x1(h, _P[f])
+        for f in ("x_title", "x_category", "x_consumption", "x_co2", "x_damage", "x_country",
+                  "x_dealer_name", "x_dealer_rating", "x_quantity_ratings", "x_pubdate")
+    }
+    cols.update({f: _x1(attrs, _P[f]) for f in ATTRS_FIELDS})
+    cols.update({f: _x1(addr, _P[f]) for f in ADDR_FIELDS})
+    cols.update(
+        x_attrs_line=attrs,
+        x_address_raw=addr,
+        x_price_cell=_x1(h, _P["x_price_cell"]).str.replace(PRICE_SUFFIX, "", regex=False),
+        # Ruby sub: FIRST occurrence only (cars_controller.rb:242)
+        x_phone=_x1(h, _P["x_phone"]).str.replace(_P["phone_prefix"], "", regex=True),
+        x_attr_map=[dict(zip(a, b)) if a is not None else None for a, b in zip(dts, dds)],
+        x_features=findall(h, "x_features"),
+        x_images=[["https:" + u for u in lst] if lst is not None else None for lst in findall(h, "x_images")],
+        x_outlinks=outlinks,
+        x_outlinks_canon=[[p[0] for p in lst] if lst is not None else None for lst in canon_pairs],
+        x_outlink_hosts=[[p[1] for p in lst] if lst is not None else None for lst in canon_pairs],
+        x_is_listing=h.str.contains(LISTING_MARKER, regex=False).astype(object).where(h.notna(), None),
     )
-    return out
+    return pd.DataFrame({f.name: cols[f.name] for f in X_STRUCT.fields})
 
 
 def with_extraction_arrow(df: DataFrame, html_col: str = "html") -> DataFrame:
@@ -164,10 +123,4 @@ def with_extraction_arrow(df: DataFrame, html_col: str = "html") -> DataFrame:
     out = df.withColumn("_x", extract_all_udf(F.col(html_col).cast("string")))
     for f in X_STRUCT.fields:
         out = out.withColumn(f.name, F.col("_x")[f.name])
-    out = out.drop("_x")
-    status: Column = (
-        F.when(F.col("x_is_listing"), F.lit("listing"))
-        .when(F.col("x_title").isNotNull() & F.col("x_price_cell").isNotNull() & F.col("x_km_cell").isNotNull(), "ok")
-        .otherwise("err")
-    )
-    return out.withColumn("x_status", status)
+    return out.drop("_x").withColumn("x_status", x_status())

@@ -31,22 +31,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# The policy, shared with the streaming fold (streaming/stream.py): a wave
+# is throttled when THROTTLE_NUM/THROTTLE_DEN of a host's fetches in it
+# returned a THROTTLE_STATUSES status; the delay doubles per throttled wave
+# from BASE_DELAY_MS, at most MAX_SHIFT times.
 THROTTLE_STATUSES = ("429", "503", "timeout")
+BASE_DELAY_MS = 100
+THROTTLE_NUM, THROTTLE_DEN = 1, 10
+MAX_SHIFT = 6
 
 
-def adaptive_backoff(
-    outcomes: DataFrame,
-    base_delay_ms: int = 100,
-    err_num: int = 1,
-    err_den: int = 10,
-    max_shift: int = 6,
-) -> DataFrame:
+def adaptive_backoff(outcomes: DataFrame, base_delay_ms: int = BASE_DELAY_MS) -> DataFrame:
     """Per-host adaptive delay from (host, wave, status) fetch outcomes.
 
     A wave is "throttled" for a host when its throttle-status count
-    clears err_num/err_den of that host's fetches in the wave (integer
-    cross-multiplication). delay_ms = base_delay_ms << min(streak,
-    max_shift), where streak = number of waves since the host's last
+    clears THROTTLE_NUM/THROTTLE_DEN of that host's fetches in the wave
+    (integer cross-multiplication). delay_ms = base_delay_ms << min(streak,
+    MAX_SHIFT), where streak = number of waves since the host's last
     clean wave (0 when the latest wave is clean, so recovery to base is
     immediate — multiplicative decrease on congestion, full restore on
     success; Heritrix uses the same shape). Wave ids are assumed
@@ -70,7 +71,7 @@ def adaptive_backoff(
         .select(
             "host",
             "wave",
-            (F.col("n_thr") * err_den >= F.col("n") * err_num).alias("thr"),
+            (F.col("n_thr") * THROTTLE_DEN >= F.col("n") * THROTTLE_NUM).alias("thr"),
         )
     )
     per_host = throttled_wave.groupBy("host").agg(
@@ -91,7 +92,7 @@ def adaptive_backoff(
         "n_waves",
         "latest_wave",
         streak.alias("throttle_streak"),
-        F.least(streak, F.lit(max_shift)).alias("_shift"),
+        F.least(streak, F.lit(MAX_SHIFT)).alias("_shift"),
     ).selectExpr(
         "host",
         "n_waves",

@@ -79,7 +79,6 @@ def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFram
 def build_bloom_table(seen: DataFrame, n_buckets: int, bits_per_key: int = 12, k: int = 5) -> DataFrame:
     """Distributed per-bucket bloom build: groupBy(bucket).applyInPandas."""
     seen_b = with_bucket(seen, n_buckets)
-    counts = seen_b.groupBy("bucket").count()
     # size each bucket's filter by its actual key count (skew-proof)
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
@@ -88,7 +87,6 @@ def build_bloom_table(seen: DataFrame, n_buckets: int, bits_per_key: int = 12, k
         bf.add_many(pdf["url_h"].to_numpy(dtype=np.int64))
         return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "n_bits": [n_bits], "k": [k], "bits": [bf.to_bytes()]})
 
-    _ = counts  # retained for future sizing telemetry
     return seen_b.select("bucket", "url_h").groupBy("bucket").applyInPandas(
         build, schema="bucket int, n_bits long, k int, bits binary"
     )

@@ -29,8 +29,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,18 +71,17 @@ class CrawlConfig:
     # the batch), so the join flips to a shuffled hash join — the sandbox
     # stand-in for the bucketed storage-partitioned join an Iceberg
     # deployment would use (bucket(url) on both sides; no corpus shuffle).
-    # WS_BCAST_BATCH_MAX overrides (multi-executor A/B: a broadcast is built
-    # serially on the driver AND deserialized once per executor, so its
-    # break-even shrinks as executors multiply).
-    broadcast_batch_threshold: int = int(os.environ.get("WS_BCAST_BATCH_MAX", 5_000_000))
+    # A broadcast is built serially on the driver AND deserialized once per
+    # executor, so its break-even shrinks as executors multiply.
+    broadcast_batch_threshold: int = 5_000_000
     # Corpus loaded as a bucketed catalog table (sources.synth.load_pages):
     # a url-equi-join exchanges ONLY the thin batch side — the corpus reads
     # in place (the Iceberg bucket(N, url) layout's behavior). The broadcast
     # path's costs (serial driver build, one deserialize+hash-build per
     # executor) then buy nothing, so the flip to the shuffled-hash join
-    # happens ~10x earlier (WS_BCAST_BATCH_MAX_BUCKETED overrides).
+    # happens ~10x earlier.
     corpus_bucketed: bool = False
-    bucketed_broadcast_threshold: int = int(os.environ.get("WS_BCAST_BATCH_MAX_BUCKETED", 500_000))
+    bucketed_broadcast_threshold: int = 500_000
     # URL-quality hygiene applied to each wave's candidates BEFORE ranking
     # (operators/urlfilter.py: blocklist / path-depth / param-count /
     # digit-slug, first-failing-rule). A dropped URL never occupies a
@@ -141,13 +138,9 @@ def tune_scan_splits(spark: SparkSession, source: DataFrame) -> dict[str, str] |
     if total <= 0:
         return
     cores = spark.sparkContext.defaultParallelism
-    # Splits per core for the fetch+extract stage (scan→join→UDF→write is
-    # one fused stage, so scan splits bound its task concurrency). Every
-    # UDF task occupies TWO threads — a JVM side and a Python worker — so
-    # <1.0 values deliberately under-subscribe the advertised core count
-    # (WS_SPLITS_PER_CORE, default 2).
-    spc = float(os.environ.get("WS_SPLITS_PER_CORE", "1"))
-    mpb = min(max(int(total / max(cores * spc, 1)), 1 << 20), 128 << 20)
+    # One split per core for the fetch+extract stage (scan→join→UDF→write
+    # is one fused stage, so scan splits bound its task concurrency).
+    mpb = min(max(int(total / max(cores, 1)), 1 << 20), 128 << 20)
     # Return the prior values so the caller can restore them: these are
     # session-global confs sized to ONE corpus, and leaking 1MB splits into
     # later unrelated scans in the same session explodes their task counts.
@@ -311,37 +304,14 @@ def run_crawl(
         n_frontier = frontier.count()  # seed-table-sized job, milliseconds
         seen = spark.createDataFrame([], "url_hash long, url string, wave int")
 
-    hosts = pages.sparkSession.createDataFrame(
-        [], "host string"
-    )  # budgets resolved lazily from robots ∪ politeness hosts
+    # budgets resolved from robots ∪ politeness hosts
     all_hosts = (
         robots.select("host").unionByName(politeness.filter(F.col("host") != "*").select("host")).distinct()
     )
     budgets = resolve_budgets(all_hosts, robots, politeness)
     budgets = budgets.cache()
-    _ = hosts
 
-    pages_slim = pages  # full table; Catalyst prunes columns per stage
     prev_splits = tune_scan_splits(spark, pages)
-
-    debug = os.environ.get("WS_DEBUG_TIMING", "0") == "1"
-
-    # AQE partition coalescing inside the wave loop: round 1 disabled it
-    # because the outlink-expansion shuffles were byte-small but
-    # compute-dense (regex canonicalization ran post-shuffle) and collapsed
-    # to 1-2 partitions. Canonicalization has since moved INTO the
-    # extraction UDF (pre-shuffle), so the post-shuffle work is cheap and
-    # coalescing now just removes hundreds of tiny-task dispatches per wave
-    # (WS_WAVE_COALESCE=0 restores the round-1 behaviour for A/B).
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_coalesce = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false" if os.environ.get("WS_WAVE_COALESCE", "1") == "0" else "true")
-
-    def _tick(label: str, t0: float) -> float:
-        t1 = time.time()
-        if debug:
-            print(f"    [wave timing] {label}: {t1 - t0:.2f}s", file=sys.stderr)
-        return t1
 
     for wave in range(start_wave, cfg.max_waves):
         # Empty frontier = crawl done, known from parquet footers (or the
@@ -351,7 +321,6 @@ def run_crawl(
             break
         wdir = _wave_dir(ckpt_dir, wave)
         os.makedirs(wdir, exist_ok=True)
-        tw = time.time()
 
         # 1. candidates minus seen (bloom-assisted when configured)
         bloom = build_bloom_table(seen, cfg.n_buckets) if cfg.use_bloom else None
@@ -391,11 +360,9 @@ def run_crawl(
         # ~1-2s/wave, which tiny corpora notice (sf0.1 headline pays ~3s)
         # but anything at scale earns back many times over — at 10^10 rows
         # a duplicated schedule recompute is catastrophic, a count job is
-        # epsilon. WS_SCHED_BARRIER=0 restores the race for A/B.
+        # epsilon.
         sched = schedule_ranked(cand, budgets, wave).persist()
-        if os.environ.get("WS_SCHED_BARRIER", "1") == "1":
-            sched.count()
-        tw = _tick(f"w{wave} schedule+barrier", tw)
+        sched.count()
         batch = sched.filter(F.col("in_budget"))
         deferred = sched.filter(~F.col("in_budget")).select("url", "host", "depth", "disc_wave", "disc_pos")
 
@@ -412,9 +379,9 @@ def run_crawl(
             cfg.bucketed_broadcast_threshold if cfg.corpus_bucketed else cfg.broadcast_batch_threshold
         )
         batch_side = F.broadcast(batch) if small_batch else batch.hint("SHUFFLE_HASH")
-        hits = pages_slim.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
+        hits = pages.join(batch_side, "url", "inner").withColumn("fetch_status", F.lit("ok"))
         misses = (
-            batch.join(pages_slim.select("url") if small_batch else pages_slim.select("url").hint("SHUFFLE_HASH"),
+            batch.join(pages.select("url") if small_batch else pages.select("url").hint("SHUFFLE_HASH"),
                        "url", "left_anti")
             .withColumn("warc_ts", F.lit(None).cast("timestamp"))
             .withColumn("html", F.lit(None).cast("binary"))
@@ -449,7 +416,6 @@ def run_crawl(
         # 564 task-seconds for 529MB at sf0.4. Scan-split-count output files
         # are the cheaper evil; finalize reads them once.)
         fetched.write.mode("overwrite").parquet(os.path.join(wdir, "fetched"))
-        tw = _tick(f'w{wave} fetch+extract+write', tw)
         # Batch size read back from the write's parquet footers (zero jobs):
         # 0 means every frontier row was seen/robots-filtered — crawl done.
         if _parquet_rows(os.path.join(wdir, "fetched")) == 0:
@@ -457,7 +423,6 @@ def run_crawl(
             shutil.rmtree(wdir, ignore_errors=True)
             break
         fetched = spark.read.parquet(os.path.join(wdir, "fetched"))
-        tw = _tick(f'w{wave} fetched-footers+reread', tw)
 
         # 6. outlinks -> next frontier. seen/order/results/metrics are all
         # projections of the materialized `fetched` — no extra per-wave
@@ -474,7 +439,6 @@ def run_crawl(
         next_frontier = merge_frontier(deferred, new_cand)
         next_frontier.write.mode("overwrite").parquet(os.path.join(wdir, "frontier"))
         sched.unpersist()
-        tw = _tick(f'w{wave} frontier-merge+write', tw)
 
         completed.append(wave)
         _write_manifest(ckpt_dir, completed)
@@ -482,10 +446,8 @@ def run_crawl(
         frontier = spark.read.parquet(os.path.join(wdir, "frontier"))
         n_frontier = _parquet_rows(os.path.join(wdir, "frontier"))
         seen = seen.unionByName(seen_delta)
-        tw = _tick(f'w{wave} manifest+frontier-footers', tw)
 
     budgets.unpersist()
-    spark.conf.set(coalesce_key, prev_coalesce)
 
     # finalize: derived views over all waves' fetched files.
     # `results` is served ZERO-COPY as a glob path over the wave files —

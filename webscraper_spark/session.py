@@ -12,6 +12,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# 1024-row Arrow batches: at ~3KB/page a batch is ~3MB — resident in LLC
+# while ~40 regex passes sweep it. 4096-row batches (~12MB) thrash the cache
+# and hammer the (shared, saturating) memory bus: measured on the sf0.4
+# crawl, local[8]: 50.4s @4096 -> 42.8s @1024; 512 (45.4s) and 16384
+# (52.1s) are both worse. Batch size is a per-core-cache constant, not a
+# data-scale knob — 1024 holds at 100TB too.
+ARROW_BATCH_ROWS = 1024
+
 
 def get_spark(
     app_name: str = "webscraper_spark",
@@ -43,22 +51,18 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
         # AQE: runtime re-planning, partition coalescing, skew-join splitting.
-        # (WS_NO_AQE=1 disables it — used to A/B plan-stability issues.)
-        .config("spark.sql.adaptive.enabled", "false" if os.environ.get("WS_NO_AQE") == "1" else "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", os.environ.get("WS_AQE_COALESCE", "true"))
+        # Coalescing also suits the crawl wave loop (plans/wave.py): outlink
+        # canonicalization runs inside the extraction UDF, before the
+        # shuffle, so post-shuffle work is cheap and coalescing just removes
+        # hundreds of tiny-task dispatches per wave.
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Runtime bloom-filter pushdown for big joins (the J1 anti-join path).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Arrow everywhere Python touches data.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 1024-row Arrow batches: at ~3KB/page a batch is ~3MB — resident in
-        # LLC while ~40 regex passes sweep it. 4096-row batches (~12MB)
-        # thrash the cache and hammer the (shared, saturating) memory bus:
-        # measured on the sf0.4 crawl, local[8]: 50.4s @4096 -> 42.8s @1024;
-        # 512 (45.4s) and 16384 (52.1s) are both worse. Batch size is a
-        # per-core-cache constant, not a data-scale knob — 1024 holds at
-        # 100TB too.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", os.environ.get("WS_ARROW_BATCH", "1024"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         # Deterministic timestamps for oracle comparison (duckdb is UTC-naive).
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: the driver is the only JVM; give it the memory.

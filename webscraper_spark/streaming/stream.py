@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from webscraper_spark.functions.extract import with_extraction
+from webscraper_spark.operators import backoff
 from webscraper_spark.schemas import PAGES
 
 
@@ -86,13 +87,13 @@ def stateful_politeness(candidates: DataFrame) -> DataFrame:
 
 _BACKOFF_OUT_SCHEMA = "host string, wave long, throttle_streak int, delay_ms long"
 _BACKOFF_STATE_SCHEMA = "streak int"
-_THROTTLE_STATUSES = ("429", "503", "timeout")
 
 
 def _backoff_fn(key: tuple, pdfs: Any, state: GroupState):
     """Per-host AIMD fold: each wave in the micro-batch either extends the
-    throttle streak (>=10% throttle statuses) or resets it to 0; the
-    streak survives micro-batch boundaries in GroupState.
+    throttle streak (the batch operator's throttle share, operators/
+    backoff.py) or resets it to 0; the streak survives micro-batch
+    boundaries in GroupState.
 
     `pdfs` is an iterator of Arrow CHUNKS of the host's batch data — one
     wave can span chunks, so the chunks are concatenated before the fold
@@ -103,9 +104,9 @@ def _backoff_fn(key: tuple, pdfs: Any, state: GroupState):
     rows = []
     for wave, grp in sorted(pdf.groupby("wave")):
         n = len(grp)
-        n_thr = int(grp["status"].isin(_THROTTLE_STATUSES).sum())
-        streak = streak + 1 if n_thr * 10 >= n * 1 else 0
-        rows.append((host, int(wave), streak, 100 << min(streak, 6)))
+        n_thr = int(grp["status"].isin(backoff.THROTTLE_STATUSES).sum())
+        streak = streak + 1 if n_thr * backoff.THROTTLE_DEN >= n * backoff.THROTTLE_NUM else 0
+        rows.append((host, int(wave), streak, backoff.BASE_DELAY_MS << min(streak, backoff.MAX_SHIFT)))
     state.update((streak,))
     yield pd.DataFrame(rows, columns=["host", "wave", "throttle_streak", "delay_ms"])
 
